@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall times.
   *
@@ -16,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * not billed to the first query.
   *
   * Kill tolerance (round-5 lesson — a contended 1-hour window produced
-  * an EMPTY bench artifact): every completed wall is streamed to stderr
+  * an EMPTY bench artifact): every completed wall is streamed to stdout
   * as a `[bench-wall] {...}` line THE MOMENT it completes, so a killed
   * run still leaves the full per-query record in the log tail; and each
   * query run is capped at SPARK_GRAFT_BENCH_CAP seconds (default 120) —
@@ -27,48 +25,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val capSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_CAP", "120").toInt
-    // Scale-adaptive shuffle partitions (round-17, VERDICT r16 #6; guide
-    // §2: derive partitioning from input size, don't hard-code either
-    // end). The old cpus-keyed setting billed every reduce stage 32
-    // near-empty tasks at sf0.1 — the driver measured the whole suite
-    // FASTER at 8 cpus than at 32 (624 vs 832 s), a pure fixed-overhead
-    // inversion. partitions = clamp(ceil(datasetBytes / 2 MiB), 1,
-    // cpus): the 2 MiB constant shapes only the small-input end (any
-    // dataset ≥ 2 MiB × parallelism reaches the clamp, so a cluster
-    // keeps its configured parallelism — the same derivation shape as
-    // the r16 streaming state-partition rule). AQE's parallelismFirst
-    // coalescing was A/B'd as the alternative and measured WORSE at
-    // sf0.1 (it collapses real compute to 1 partition: q271 7.4 →
-    // 12.9 s); this derivation at 8 partitions measured better on every
-    // probed query class (ETL q109 14.2 → 10.4, graph q172 13.1 → 9.7,
-    // shingle q156 3.5 → 2.2, relational/streaming neutral-to-better).
-    def dirBytes(p: String): Long = {
-      val d = new java.io.File(p)
-      if (!d.isDirectory) 0L
-      else d.listFiles().map(f =>
-        if (f.isDirectory) dirBytes(f.getPath) else f.length()).sum
-    }
-    val bytesPerPart = sys.env
-      .getOrElse("SPARK_GRAFT_SHUFFLE_BYTES_PER_PARTITION", (2L << 20).toString)
-      .toLong
-    val shuffleParts = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(
-      math.max(1L, math.min(
-        (dirBytes(sfDir) + bytesPerPart - 1) / bytesPerPart, cpus.toLong)).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries ns timestamps; read as long, convert in Q.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.driver.maxResultSize", "2g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle partitions derived from the input, as in BenchOne and
+    // ExplainOne, so an isolated retime or plan dump sees this plan
+    val spark = GraftSession.start(GraftSession.partitionsFor(sfDir, GraftSession.cpus))
 
     // warm up: JVM + parquet footer reads
     spark.read.parquet(s"$sfDir/nation.parquet").count()

@@ -1,62 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch: time a subset of declared queries (debug helper). Queries
-  * run in ARGUMENT order, and a repeated name runs again — put a cheap
-  * query first (or repeat the target) to separate JVM warm-up from the
+/** Times the named queries, one `[benchone] <query> <seconds> s` line
+  * each (graft.Bench's capped-query repro parses these). Queries run in
+  * ARGUMENT order, and a repeated name runs again — put a cheap query
+  * first (or repeat the target) to separate JVM warm-up from the
   * steady-state wall. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // session config mirrors graft.Bench exactly — an isolated retime on
-    // a different config (e.g. the missing broadcast threshold) would
-    // measure a different plan than the suite bench did
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // default mirrors Bench's input-derived shuffle partitions (round-17);
-    // SPARK_GRAFT_SHUFFLE stays the A/B override
-    def dirBytes(p: String): Long = {
-      val f = new java.io.File(p)
-      if (!f.isDirectory) 0L
-      else f.listFiles().map(c =>
-        if (c.isDirectory) dirBytes(c.getPath) else c.length()).sum
-    }
-    val bytesPerPart = sys.env
-      .getOrElse("SPARK_GRAFT_SHUFFLE_BYTES_PER_PARTITION", (2L << 20).toString)
-      .toLong
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(1L, math.min(
-        (dirBytes(sfDir) + bytesPerPart - 1) / bytesPerPart,
-        cpus.toLong)).toString)
-    val builder0 = SparkSession.builder()
-    // debug-only A/B knob: shuffle/spill scratch device
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-      .foreach(d => builder0.config("spark.local.dir", d))
-    val spark = builder0
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.driver.maxResultSize", "2g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // debug-only A/B knob for the size-gated iteration-state broadcasts
-    sys.env.get("SPARK_GRAFT_ITER_BCAST")
-      .foreach(v => spark.conf.set(graft.operators.IterState.ConfKey, v))
-    // debug-only A/B knob for the CC local-finish gate
-    sys.env.get("SPARK_GRAFT_CC_LOCAL")
-      .foreach(v => spark.conf.set(
-        graft.operators.ConnectedComponents.LocalSolveConfKey, v))
-    // debug-only A/B knob: arbitrary session confs, ';'-separated k=v
-    // (e.g. SPARK_GRAFT_EXTRA_CONF="spark.sql.adaptive.coalescePartitions.parallelismFirst=false")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-      })
+    // the same session and derived partitions as graft.Bench, so an
+    // isolated retime measures the plan the suite bench timed
+    val spark = GraftSession.start(GraftSession.partitionsFor(sfDir, GraftSession.cpus))
     // debug-only job profile: SPARK_GRAFT_JOBLOG=1 prints one line per
     // Spark job (id, wall, #stages/tasks, call site) so a multi-action
     // query's wall can be attributed without the UI

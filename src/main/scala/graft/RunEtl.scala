@@ -101,15 +101,9 @@ object RunEtl {
       System.err.println("usage: graft.RunEtl <dataset.json>")
       sys.exit(64)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.start(cpus,
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
     val code = try execute(spark, args(0)) finally spark.stop()
     sys.exit(code)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stress-scale data generator: replicates a testdata directory R×
@@ -39,15 +39,7 @@ object ScaleData {
     // %26 wrap would silently reintroduce the distance-0 name clones
     // the perturbation exists to prevent
     require(reps >= 1 && reps <= 27, s"reps out of the letter-suffix range: $reps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start(GraftSession.cpus)
     val OFF = 1000000000L
 
     def reps5(t: DataFrame): DataFrame =

@@ -1,31 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: graft.Verify <sfDir> <outDir> [query...]. Trailing names dump
+  * only those queries, and oracle_sql.json then holds only their SQL, so
+  * scripts/check.py checks just that subset; with exactly two arguments
+  * it dumps the full suite. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
-    // optional trailing names: dump only those queries (local iteration);
-    // the driver passes exactly two args and gets the full suite
     val only = args.drop(2).toSet
+    def selected(name: String): Boolean = only.isEmpty || only(name)
     only.diff(SparkEntry.queries.keySet).foreach(n =>
       System.err.println(s"[verify] WARNING: no query named '$n' — skipped"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries ns timestamps; read as long, convert in Q.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // cpus partitions, not the input-derived count: sf0.01 would derive
+    // one, and the gate must keep running multi-partition plans
+    val spark = GraftSession.start(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // no coalesce(1): a single-task write serializes at larger sf; the
     // driver reads the per-query directory as a glob either way
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -51,6 +47,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -435,18 +435,16 @@ object Etl {
       // one shard per shuffle partition): every line-oriented product
       // is ~entityCount lines, and entityCount is already counted, so
       // the file count derives from the data —
-      // ceil(entityCount / spark.graft.productRowsPerFile [500k lines
-      // ≈ a few hundred MB of FtM JSON]) — instead of inheriting the
-      // cpus-keyed partition count. Locally that turns 10 products ×
-      // 32 near-empty shards (each a task commit, then a serial
-      // publish-copy of ~330 files) into ~10 files; at 100 TB the same
-      // formula yields thousands of right-sized shards. coalesce, not
-      // repartition: no exchange, and sortWithinPartitions keeps the
-      // per-file determinism contract unchanged (products are line
-      // sets).
+      // ceil(entityCount / 500k lines [≈ a few hundred MB of FtM
+      // JSON]) — instead of inheriting the cpus-keyed partition count.
+      // Locally that turns 10 products × 32 near-empty shards (each a
+      // task commit, then a serial publish-copy of ~330 files) into ~10
+      // files; at 100 TB the same formula yields thousands of
+      // right-sized shards. coalesce, not repartition: no exchange, and
+      // sortWithinPartitions keeps the per-file determinism contract
+      // unchanged (products are line sets).
       val productFiles: Int = {
-        val target = spark.conf.getOption("spark.graft.productRowsPerFile")
-          .map(_.toLong).getOrElse(500000L)
+        val target = 500000L
         math.max(1L, (entityCount + target - 1) / target)
           .min(Int.MaxValue.toLong).toInt
       }
@@ -529,10 +527,7 @@ object Etl {
         // sink concurrent) = 20.4s — the cap does not serialize the ten
         // product sinks; each exporter is itself a parallel Spark
         // action, so extra submitter threads only contend for cores.
-        // SPARK_GRAFT_EXPORT_POOL overrides for cluster-side tuning.
-        val poolThreads = math.max(1, sys.env.get("SPARK_GRAFT_EXPORT_POOL")
-          .flatMap(_.toIntOption)
-          .getOrElse(math.min(cfg.exporters.size, 8)))
+        val poolThreads = math.max(1, math.min(cfg.exporters.size, 8))
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           poolThreads,
           new java.util.concurrent.ThreadFactory {
@@ -583,7 +578,9 @@ object Etl {
           s"${cfg.outRoot}/datasets/latest/${cfg.datasetName}")
         val fs = src.getFileSystem(conf)
         if (fs.exists(dst)) fs.delete(dst, true)
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
+        // a run with no products writes no version directory to copy;
+        // the marker's create then makes the latest directory
+        if (fs.exists(src)) org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
         val marker = fs.create(
           new org.apache.hadoop.fs.Path(dst, "_VERSION"), true)
         marker.write(cfg.version.getBytes("UTF-8"))

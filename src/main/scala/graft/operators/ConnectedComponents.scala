@@ -38,7 +38,7 @@ object ConnectedComponents {
     * instead of more distributed star rounds. 0 disables.
     *
     * Why this is a scale optimization and not a local-mode cheat: the
-    * bound equals [[IterState.DefaultCap]] — a frame this size is
+    * bound equals [[IterState.RowsCap]] — a frame this size is
     * already collected TO the driver (and shipped to every executor)
     * whenever the size-gated broadcast fires, so solving it there costs
     * strictly less memory than the broadcast path the operator already
@@ -51,7 +51,7 @@ object ConnectedComponents {
     * set exceeds the gate run the distributed rounds unchanged until
     * contraction brings them under it. */
   val LocalSolveConfKey = "spark.graft.ccLocalSolveEdges"
-  val LocalSolveDefault: Long = IterState.DefaultCap
+  val LocalSolveDefault: Long = IterState.RowsCap
 
   /** Byte companion to the row gate (round-17, VERDICT r16 #2): the row
     * cap alone was calibrated for long keys (~32 MB of keys at 2M rows)

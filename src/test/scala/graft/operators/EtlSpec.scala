@@ -97,6 +97,20 @@ class EtlSpec extends SparkSpec {
     assert(spark.read.text(s"$root/datasets/latest/t/entities.ftm.json").count() === 0)
   }
 
+  test("a run with no exporters still promotes latest and records the version") {
+    val root = tmpRoot("noexport")
+    val res = Etl.run(spark, stmts(baseRows, "2025-01-01 00:00:00"), noDecisions,
+      Etl.Config("t", "v1", root, "2025-01-01 00:00:00", exporters = Seq.empty))
+    assert(res.entityCount === 3)
+    assert(res.products.isEmpty)
+    val marker = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/datasets/latest/t/_VERSION")), "UTF-8")
+    assert(marker === "v1")
+    val state = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/state/t/last_successful_version")), "UTF-8")
+    assert(state === "v1")
+  }
+
   test("issue log: crawl issues + dangling-ref warnings publish as issues.json and index issue_levels") {
     val root = tmpRoot("issues")
     // e9 references a missing entity via an entity-ref prop
