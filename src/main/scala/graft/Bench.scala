@@ -389,13 +389,15 @@ object Bench {
     // per-query comparison needs the `queries` map on stdout, and the
     // first full line above is too far from the tail for a bounded
     // capture. So the SECOND-TO-LAST line is the driver-contract line —
-    // {"metric","value","unit","queries",...} with the queries map EARLY
-    // and the scaling block LAST (a tail capture that truncates the line
-    // head still shows the scaling retimes, exactly as in r15/r16) —
-    // and the guaranteed-parse compact line stays LAST, unchanged.
+    // {"metric":"total_full","value","unit","queries",...} with the
+    // queries map EARLY and the scaling block LAST (a tail capture that
+    // truncates the line head still shows the scaling retimes) — and the
+    // guaranteed-parse compact {"metric":"total",...} line stays LAST. The
+    // two discriminators differ so a consumer matching "metric":"total"
+    // finds only the compact line.
     val flaggedJson = flaggedNames.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","n_queries":${results.size},"queries":$qs,"cap_sec":$capSec,"capped":$cappedJson,"contended":$contendedJson,"capped_repro":$reproJson,"scaling_flagged":$flaggedJson,"scaling":$scalingJson}""")
+      s"""{"metric":"total_full","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","n_queries":${results.size},"queries":$qs,"cap_sec":$capSec,"capped":$cappedJson,"contended":$contendedJson,"capped_repro":$reproJson,"scaling_flagged":$flaggedJson,"scaling":$scalingJson}""")
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","n_queries":${results.size},"cap_sec":$capSec,"capped":$cappedJson,"contended":$contendedJson,"capped_repro":$reproJson,"scaling_flagged":$flaggedJson,"full_summary":"$outPath"}""")
     spark.stop()

@@ -1,7 +1,9 @@
 package graft.functions
 
+import graft.functions.expr.{DateShape, DateShapeGuard, MonthTable, ReplaceMonths}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Date extraction (F3) and Excel serial dates (F14) as Catalyst
   * expression chains — the Spark-native analog of the reference's
@@ -9,9 +11,10 @@ import org.apache.spark.sql.functions._
   * zavod/zavod/meta/dates.py:12-41):
   *
   *  1. month-name replacement from a per-dataset mapping (case-
-  *     insensitive, word-bounded) — `replace_months`;
+  *     insensitive, word-bounded) — `replace_months`, one regex scan;
   *  2. a `try_to_date` coalesce chain over the dataset's format list
-  *     plus the always-accepted ISO prefix forms `%Y-%m-%d|%Y-%m|%Y`;
+  *     plus the always-accepted ISO prefix forms `%Y-%m-%d|%Y-%m|%Y`,
+  *     each format behind its shape guard;
   *  3. two-digit years re-based into [base, base+100) (dates.py:26-27);
   *  4. optional year-only extraction (all standalone 1800–2100 numbers);
   *  5. fallback to the original text.
@@ -20,6 +23,21 @@ import org.apache.spark.sql.functions._
   * format carries ("1990", "1990-05", "1990-05-01") — Spark's DateType
   * cannot hold partial dates, so dates stay strings engine-wide (the
   * same decision the reference makes with prefixdate).
+  *
+  * Kernel preconditions and guard ([[graft.functions.expr]]):
+  *  - month forms are runs of word characters and no normalized value
+  *    contains a form ([[graft.functions.expr.MonthTable]] checks this
+  *    when the column is built); normalized values are inserted
+  *    literally;
+  *  - a format whose pattern uses only `d`, `dd`, `M`, `MM`, `yy`,
+  *    `yyyy`–`yyyyyy` and literal ASCII punctuation or spaces, with a
+  *    literal between any two fields, is parsed only when the string has
+  *    that pattern's shape ([[graft.functions.expr.DateShape]]); any
+  *    other pattern goes to `try_to_date` unguarded;
+  *  - a `yyyy`+ year outside [-290307, 294246] fails its guard, so a
+  *    value such as "+300000" falls through to the next format or the
+  *    fallback where `try_to_date` used to throw a long overflow and
+  *    abort the query.
   */
 object Dates {
 
@@ -36,10 +54,20 @@ object Dates {
   /** Replace month-name forms with their normalized value; mappings are
     * (form → normalized), matched case-insensitively at word boundaries
     * (meta/dates.py:35-41). Longer forms first so "March" wins over
-    * "Mar". */
+    * "Mar". One scan of one alternation ([[MonthTable]]). */
   def replaceMonths(text: Column, mappings: Seq[(String, String)]): Column =
-    mappings.sortBy(-_._1.length).foldLeft(text) { case (t, (form, norm)) =>
-      regexp_replace(t, "(?i)\\b" + java.util.regex.Pattern.quote(form) + "\\b", norm)
+    if (mappings.isEmpty) text
+    else ColumnBridge.column(ReplaceMonths(ColumnBridge.expression(text), MonthTable(mappings)))
+
+  /** `try_to_date(s, pattern)`, skipped (null) when `s` fails the
+    * pattern's shape guard; unguarded for patterns the guard does not
+    * model. */
+  private def tryToDate(s: Column, pattern: String): Column =
+    DateShape.of(pattern) match {
+      case Some(shape) =>
+        when(ColumnBridge.column(DateShapeGuard(ColumnBridge.expression(s), shape)),
+          try_to_date(s, pattern))
+      case None => try_to_date(s, pattern)
     }
 
   /** Re-base a parsed date whose two-digit year landed in an arbitrary
@@ -54,7 +82,7 @@ object Dates {
   def extractYears(text: Column): Column =
     array_sort(array_distinct(filter(
       regexp_extract_all(text, lit("\\b(\\d+)\\b"), lit(1)),
-      y => y.cast("int").between(1800, 2100))))
+      y => y.try_cast("int").between(1800, 2100))))
 
   /** Full extract_date: month replacement → format chain → optional
     * year extraction → original-text fallback. Returns one string (the
@@ -68,18 +96,20 @@ object Dates {
       yearOnly: Boolean = false): Column = {
     val replaced = trim(replaceMonths(text, months))
     val parsedChain = (formats ++ AlwaysFormats).map { f =>
-      val parsed0 = try_to_date(replaced, f.pattern)
+      val parsed0 = tryToDate(replaced, f.pattern)
       val parsed = twoDigitYearBase match {
         // only rebase formats that actually carry a two-digit year
         case Some(base) if f.pattern.contains("yy") && !f.pattern.contains("yyyy") =>
-          when(parsed0.isNotNull, rebaseTwoDigitYear(parsed0, base))
+          rebaseTwoDigitYear(parsed0, base)
         case _ => parsed0
       }
-      when(parsed.isNotNull, date_format(parsed, f.out))
+      date_format(parsed, f.out)
     }
     val fromFormats = coalesce(parsedChain: _*)
+    // ';'-joined years, null when there are none; extractYears once
     val years = if (yearOnly)
-      when(size(extractYears(text)) > 0, array_join(extractYears(text), ";"))
+      aggregate(extractYears(text), lit(null).cast("string"),
+        (acc, y) => coalesce(concat(acc, lit(";"), y), y))
     else lit(null)
     coalesce(fromFormats, years, trim(text))
   }

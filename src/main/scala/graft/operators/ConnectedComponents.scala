@@ -164,6 +164,11 @@ object ConnectedComponents {
       StructType(Seq(StructField("src", dt), StructField("dst", dt))))
   }
 
+  /** The edge-set signature [[run]] takes once per round. */
+  private final case class Sig(rows: Long, hash: java.math.BigDecimal, srcBytes: Long, dstBytes: Long) {
+    def keyBytes: Long = srcBytes + dstBytes
+  }
+
   /** edges: two long columns (src, dst). Returns (id, component) where
     * component = min node id of the connected component. Nodes given in
     * `nodes` (single long column `id`) are included even when isolated.
@@ -200,29 +205,27 @@ object ConnectedComponents {
 
     // Order-independent set signature: (cardinality, sum of 64-bit edge
     // hashes as decimal — decimal so ANSI mode can't overflow-throw,
-    // plus the summed key octets that price the local-finish byte gate
-    // — measured for string keys, exact rows × width for fixed-width
-    // ones; all in the SAME single scan).
+    // plus the summed src and dst key octets that price the local-finish
+    // byte gate and the final attach — measured for string keys, exact
+    // rows × width for fixed-width ones; all in the SAME single scan).
     // Over distinct pointer sets, two different sets collide with
     // probability ~2⁻⁶⁴ per comparison; a collision costs one wasted
     // exact check below, never a wrong result.
     val keyIsString =
       e.schema("src").dataType == org.apache.spark.sql.types.StringType
     val fixedKeyWidth = e.schema("src").dataType.defaultSize.toLong
-    def sig(df: DataFrame): (Long, java.math.BigDecimal, Long) = {
-      val keyBytesExpr =
-        if (keyIsString)
-          sum((octet_length(col("src")) + octet_length(col("dst"))).cast("long"))
-        else sum(lit(0L))
+    def sig(df: DataFrame): Sig = {
+      def octets(c: String) =
+        if (keyIsString) sum(octet_length(col(c)).cast("long")) else sum(lit(0L))
       val r = df.agg(
         count(lit(1)),
         sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")),
-        keyBytesExpr).head()
+        octets("src"), octets("dst")).head()
       val s = if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1)
-      val kb =
-        if (keyIsString) { if (r.isNullAt(2)) 0L else r.getLong(2) }
-        else r.getLong(0) * 2L * fixedKeyWidth
-      (r.getLong(0), s, kb)
+      def kb(i: Int) =
+        if (keyIsString) { if (r.isNullAt(i)) 0L else r.getLong(i) }
+        else r.getLong(0) * fixedKeyWidth
+      Sig(r.getLong(0), s, kb(2), kb(3))
     }
     var prevSig = sig(e) // materialize once so each round starts cached
 
@@ -259,8 +262,8 @@ object ConnectedComponents {
       // below is unchanged. Both gates must pass: rows (union-find
       // array sizing) and key bytes (collect()/driver-heap sizing —
       // see LocalSolveBytesConfKey).
-      if (canLocal && prevSig._1 <= localCap &&
-          (localBytesCap <= 0 || prevSig._3 <= localBytesCap)) {
+      if (canLocal && prevSig.rows <= localCap &&
+          (localBytesCap <= 0 || prevSig.keyBytes <= localBytesCap)) {
         val solved = localSolve(e)
         e.unpersist(blocking = false)
         e = solved
@@ -316,7 +319,7 @@ object ConnectedComponents {
         // Cheap per-round barrier: one aggregate scan materializes the
         // (possibly chained) checkpoints and yields the set signature.
         val newSig = sig(small)
-        if (newSig._1 == prevSig._1 && newSig._2.compareTo(prevSig._2) == 0) {
+        if (newSig.rows == prevSig.rows && newSig.hash.compareTo(prevSig.hash) == 0) {
           // Signature says fixpoint — confirm with the exact set-equality
           // join. Runs once at convergence (plus ~never on collisions),
           // not once per round.
@@ -336,10 +339,13 @@ object ConnectedComponents {
     }
 
     // At fixpoint every edge is (node -> component root). Attach isolated nodes.
+    // comp is built from (src, dst) and (dst, dst) rows, so its payload
+    // is at most srcBytes + 3 × dstBytes.
     val comp = e.select(col("src").as("id"), col("dst").as("component"))
       .union(e.select(col("dst").as("id"), col("dst").as("component")))
       .groupBy(col("id")).agg(min(col("component")).as("component"))
-    val out = n.join(gated(comp, 2 * prevSig._1, 2 * prevSig._3), Seq("id"), "left")
+    val out = n.join(gated(comp, 2 * prevSig.rows, prevSig.srcBytes + 3 * prevSig.dstBytes),
+      Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
     out
   }

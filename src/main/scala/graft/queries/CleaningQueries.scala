@@ -73,12 +73,12 @@ object CleaningQueries {
     "Juni", "Juli", "August", "September", "Oktober", "November", "Dezember")
   private val EnglishMonths = Seq("Jan", "Feb", "Mar", "Apr", "May", "Jun",
     "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
-  private val MonthMappings: Seq[(String, String)] =
+  private[graft] val MonthMappings: Seq[(String, String)] =
     (GermanMonths.zipWithIndex ++ EnglishMonths.zipWithIndex)
       .map { case (m, i) => m -> f"${i + 1}%02d" }
 
-  /** The replacement chain applied in the same (length-desc, stable)
-    * order as Dates.replaceMonths. */
+  /** The oracle's replacement chain: one regexp_replace per form in the
+    * (length-desc, stable) order of Dates.replaceMonths' alternation. */
   private def sqlReplaceMonths(e: String): String =
     MonthMappings.sortBy(-_._1.length).foldLeft(e) { case (acc, (form, norm)) =>
       s"regexp_replace($acc, '(?i)\\b$form\\b', '$norm', 'g')"

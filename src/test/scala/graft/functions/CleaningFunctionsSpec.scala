@@ -49,6 +49,21 @@ class CleaningFunctionsSpec extends SparkSpec {
     assert(ed("n/a") == "n/a")              // fallback to original
   }
 
+  test("extract_date: a number past Int range in year-only text does not abort") {
+    def years(s: String) = one(Dates.extractDate(lit(s), Nil, yearOnly = true))
+    assert(years("tel +4412345678") == "tel +4412345678")
+    assert(years("born 1990, tel 4412345678") == "1990")
+  }
+
+  test("extract_date: a year past the timestamp range falls back instead of overflowing") {
+    def ed(s: String) = one(Dates.extractDate(lit(s), Seq(Dates.DateFmt("dd. MM yyyy"))))
+    assert(ed("+300000") == "+300000")
+    assert(ed("-300000-01") == "-300000-01")
+    assert(ed("01. 02 +300000") == "01. 02 +300000")
+    assert(ed("+01994") == "1994")          // signed, in range: still parsed
+    assert(ed("01. 02 -1994") == "-1994-02-01")
+  }
+
   test("excel serial dates convert inside the validity window") {
     assert(one(Dates.excelSerialDate(lit(44876))) == "2022-11-11T00:00:00")
     assert(one(Dates.excelSerialDate(lit(100))) == null)

@@ -121,6 +121,33 @@ class ConnectedComponentsSpec extends SparkSpec {
     } finally spark.conf.unset(IterState.BytesConfKey)
   }
 
+  test("final attach prices dst keys longer than src keys (src + 3 × dst bytes)") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    // 20 two-node components, each a 3-char node pointing at its 300-char
+    // root (roots sort first, so they are the dst side). The attached
+    // labeling carries src + 3 × dst = 60 + 18,000 octets, above twice
+    // the signature's total (12,120).
+    def root(i: Int): String = f"a$i%02d" + ("x" * 297)
+    val edges = (0 until 20).map(i => (f"b$i%02d", root(i))).toDF("src", "dst")
+    val nodes = edges.select($"src".as("id")).union(edges.select($"dst"))
+    def hinted(cap: Long): (Boolean, Map[String, String]) = {
+      spark.conf.set(ConnectedComponents.LocalSolveConfKey, "0")
+      spark.conf.set(IterState.BytesConfKey, cap.toString)
+      try {
+        val out = ConnectedComponents.run(nodes, edges)
+        (out.queryExecution.analyzed.collectFirst { case h: ResolvedHint => h }.nonEmpty,
+          out.as[(String, String)].collect().toMap)
+      } finally {
+        spark.conf.unset(ConnectedComponents.LocalSolveConfKey)
+        spark.conf.unset(IterState.BytesConfKey)
+      }
+    }
+    val (under, labels) = hinted(15000L)
+    assert(!under) // 18,060 octets exceed the cap: no broadcast
+    assert(hinted(20000L)._1)
+    assert(labels == (0 until 20).flatMap(i => Seq(f"b$i%02d" -> root(i), root(i) -> root(i))).toMap)
+  }
+
   test("disjoint components and isolated nodes keep separate labels") {
     val nodes = Seq(1L, 2L, 3L, 10L, 11L, 99L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
